@@ -2,10 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.plans.{CosineSimilarity, SrpSignature}
-import graft.plans.TextExpressions.{AdjacentPairs, MinHashSig, SimHash16, Tokens, WordShingles}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point, so a cluster can load the engine's
   * functions at session build with no code changes:
@@ -15,20 +12,10 @@ import graft.plans.TextExpressions.{AdjacentPairs, MinHashSig, SimHash16, Tokens
   *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
   * }}}
   *
-  * Same registry entries as [[GraftFunctions.register]] (which covers the
-  * already-built-session case).
+  * Same function table as [[GraftFunctions.register]] (which covers the
+  * already-built-session case): [[GraftFunctions.all]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intLit(e: Expression): Int = {
-    require(e.foldable, s"expected an integer literal, got non-constant $e")
-    e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"expected an integer literal, got $other")
-    }
-  }
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(
@@ -50,26 +37,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // pruning can use (see plans/GeneratedPartitionPruning.scala)
     ext.injectOptimizerRule(session =>
       graft.plans.GeneratedPartitionPruning(session))
-    ext.injectFunction((FunctionIdentifier("cosine_similarity"),
-      info("cosine_similarity", "_FUNC_(a, b) - cosine similarity of two float arrays"),
-      es => CosineSimilarity(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "_FUNC_(text, n) - distinct word n-gram shingles"),
-      es => WordShingles(es(0), intLit(es(1)))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "_FUNC_(shingles, k) - k md5 MinHash components"),
-      es => MinHashSig(es(0), intLit(es(1)))))
-    ext.injectFunction((FunctionIdentifier("simhash16"),
-      info("simhash16", "_FUNC_(text) - 16-bit SimHash bitstring"),
-      es => SimHash16(es(0))))
-    ext.injectFunction((FunctionIdentifier("graft_tokens"),
-      info("graft_tokens", "_FUNC_(text) - whitespace tokens"),
-      es => Tokens(es(0))))
-    ext.injectFunction((FunctionIdentifier("adjacent_pairs"),
-      info("adjacent_pairs", "_FUNC_(text) - adjacent token pairs, with multiplicity"),
-      es => AdjacentPairs(es(0))))
-    ext.injectFunction((FunctionIdentifier("srp_signature"),
-      info("srp_signature", "_FUNC_(vec, planes, dims) - sign-random-projection LSH bits"),
-      es => SrpSignature(es(0), intLit(es(1)), intLit(es(2)))))
+    GraftFunctions.all.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
+    }
   }
 }

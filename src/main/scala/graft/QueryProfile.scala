@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Scratch profiling main (like [[Profile]]): per-query breakdown of where
+/** Scratch profiling main: per-query breakdown of where
   * bench wall time goes — plan-construction time vs action time, job/stage
   * counts, summed executor task time. Drives the optimization round's
   * "measure first" loop; not part of the engine surface.
@@ -66,7 +66,8 @@ object QueryProfile {
       jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0)
       val t0 = System.nanoTime()
       // a failing query must print as FAILED, not as a fast row (ADVICE
-      // r16): Bench marks these -1; mirror that here
+      // r16). Bench does not mark these: it discards the -1L and records
+      // the time until the exception as a sample
       var failed: Option[String] = None
       val df =
         try Some(SparkEntry.queries(n)(spark, sfDir))

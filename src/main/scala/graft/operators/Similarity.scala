@@ -295,7 +295,7 @@ object Similarity {
       }
       cents = cents.zipWithIndex.map { case (old, k) => upd.getOrElse(k, old) }
     }
-    kmCentCache.put((s, d), cents)
+    kmCentCache.of(s).put(d, cents)
     qdf.withColumn("nn", kmNearest(cents))
       .select(col("vec_id"), col("label"),
         col("nn").getField("cid").as("cid"), col("nn").getField("dist").as("dist"))
@@ -305,20 +305,12 @@ object Similarity {
     * matrix [[kmeansAssign]] ends on, memoized alongside the
     * RelationCache'd assignment so residual consumers (q172) never rerun
     * the Lloyd iteration. */
-  private val kmCentCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Array[Long]]]()
-  private def kmeansCentroids(s: SparkSession, d: String): Seq[Array[Long]] = {
-    // the RelationCache session-key discipline: key on the session
-    // OBJECT (identityHashCode can collide across sessions) and retire
-    // stopped sessions' entries — their assignments died with the
-    // executors; only the driver matrices would linger
-    kmCentCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (s, d)
-    Option(kmCentCache.get(key)).getOrElse {
+  private val kmCentCache = new graft.sources.Memo[Seq[Array[Long]]]
+  private def kmeansCentroids(s: SparkSession, d: String): Seq[Array[Long]] =
+    Option(kmCentCache.of(s).get(d)).getOrElse {
       kmeansAssigned(s, d).count() // materialize → kmeansAssign fills the cache
-      kmCentCache.get(key)
+      kmCentCache.of(s).get(d)
     }
-  }
 
   /** [[kmeansAssign]]'s converged result, one materialization per
     * (session, dir): q158 and q159 both consume it, so the 3-pass
@@ -370,18 +362,18 @@ object Similarity {
     * convention) and the codebook matrix memoized beside it — bench and
     * repeat callers pay the ADC scan, not a retrain, which is the
     * production cost model (codebooks change on rebuild, not per query). */
-  private val pqCentCache =
-    scala.collection.concurrent.TrieMap[(Int, String, String), Array[Array[Array[Long]]]]()
+  private val pqCentCache = new graft.sources.Memo[Array[Array[Array[Long]]]]
 
   private def pqCached(s: SparkSession, d: String, variant: String)(
       input: => DataFrame): (DataFrame, Array[Array[Array[Long]]]) = {
-    val key = (System.identityHashCode(s), d, variant)
+    val key = s"$d@$variant"
     val enc = graft.sources.RelationCache.of(s, s"similarity.pqEnc.$variant", d) {
       val (e, c) = pqFit(input)
-      pqCentCache.put(key, c)
+      pqCentCache.of(s).put(key, c)
       e
     }
-    (enc, pqCentCache(key))
+    (enc, Option(pqCentCache.of(s).get(key)).getOrElse(
+      throw new NoSuchElementException(s"key not found: $key")))
   }
 
   private def pqTrained(s: SparkSession, d: String): (DataFrame, Array[Array[Array[Long]]]) =

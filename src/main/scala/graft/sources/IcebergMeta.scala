@@ -109,11 +109,8 @@ object IcebergMeta {
     // file identity includes (size, mtime): a wiped-and-re-exported root
     // reusing a data-file path in the same JVM must not serve the old
     // file's bounds into new manifests (the manifestPartCache discipline)
-    val fileSig =
-      try s"${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
-      catch { case _: java.io.IOException => "absent" }
     footerMetricsCache.getOrElseUpdate(
-      p.toString + "@" + fileSig + "#" + cols.toSeq.sortBy(_._1).map {
+      FileId.orAbsent(p).toString + "#" + cols.toSeq.sortBy(_._1).map {
         case (n, (id, dt)) => s"$n:$id:${dt.simpleString}" }.mkString(","), {
       import org.apache.spark.sql.types._
       import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
@@ -1273,16 +1270,15 @@ object IcebergMeta {
       operation: String, schemaId: Int, manifestList: String,
       deletedDataFiles: Long = 0L)
 
-  // (root, hint value, file mtime, file size) → parsed metadata; a
+  // (root, hint value, file identity) → parsed metadata; a
   // tailing stream's per-trigger snapshots() costs one hint read + two
   // stats after the first parse of each chain version. MTIME + SIZE in
   // the key make the cache correct under snapshot expiry, which
-  // rewrites the current metadata file IN PLACE — mtime granularity can
-  // be a millisecond or coarser, and expiry always changes the byte
-  // length (it removes snapshot entries), so the size component closes
-  // the same-millisecond rewrite window a bare-mtime key leaves open.
+  // rewrites the current metadata file IN PLACE — the full-precision
+  // mtime and the size together close the same-millisecond rewrite
+  // window a bare millisecond-mtime key leaves open (see [[FileId]]).
   private val metadataCache = TrieMap
-    .empty[(String, Long, Long, Long), com.fasterxml.jackson.databind.JsonNode]
+    .empty[(String, Long, FileId), com.fasterxml.jackson.databind.JsonNode]
 
   /** Read-plane format-version gate — the Iceberg twin of the Delta
     * face's `requireDeltaReaderProtocol`. A non-v2 chain read under v2
@@ -1333,9 +1329,7 @@ object IcebergMeta {
       s"no Iceberg metadata at $root (exportIcebergMeta first)")
     val n = Files.readString(hint).trim.toLong
     val f = dir.resolve(s"v$n.metadata.json")
-    val mt = Files.getLastModifiedTime(f).toMillis
-    val sz = Files.size(f)
-    metadataCache.getOrElseUpdate((root, n, mt, sz),
+    metadataCache.getOrElseUpdate((root, n, FileId(f)),
       mapper.readTree(Files.readString(f)))
   }
 
@@ -1761,12 +1755,12 @@ object IcebergMeta {
   // manifest file identity → its parsed per-file metrics. Manifests are
   // immutable; entries never invalidate.
   private val manifestPartCache = TrieMap
-    .empty[(String, Long, Long), Map[String, FileMetrics]]
+    .empty[FileId, Map[String, FileMetrics]]
   // manifest LIST identity → its data-manifest paths (lists are
   // immutable too): keeps a per-query prune/fill at O(new metadata)
   // instead of re-reading every snapshot's list avro
   private val manifestListCache = TrieMap
-    .empty[(String, Long, Long), Seq[String]]
+    .empty[FileId, Seq[String]]
 
   /** Normalized data-file path → manifest metrics, from every
     * snapshot's data manifests — consulted only when a scan actually
@@ -1835,8 +1829,7 @@ object IcebergMeta {
       snapshots(root).map(_.manifestList).distinct
         .flatMap { l =>
           val p = Paths.get(l)
-          manifestListCache.getOrElseUpdate(
-            (l, Files.size(p), Files.getLastModifiedTime(p).toMillis),
+          manifestListCache.getOrElseUpdate(FileId(p),
             readAvro(p)
               .filter(_.get("content").asInstanceOf[Int] == 0)
               .map(_.get("manifest_path").toString))
@@ -1846,8 +1839,7 @@ object IcebergMeta {
     // sequential driver-side walk planning pays
     val indexOne = (m: String) => {
       val p = Paths.get(m)
-      val key = (m, Files.size(p), Files.getLastModifiedTime(p).toMillis)
-      manifestPartCache.getOrElseUpdate(key,
+      manifestPartCache.getOrElseUpdate(FileId(p),
         readAvro(p).map { e =>
           val df = e.get("data_file").asInstanceOf[GenericRecord]
           val partRec = Option(df.get("partition"))
@@ -1987,13 +1979,9 @@ object IcebergMeta {
   // manifestListCache invalidation discipline. Consulted only on
   // rename-bearing chains.
   private val footerCache =
-    TrieMap.empty[(String, Long, Long), Seq[(String, Option[Int])]]
+    TrieMap.empty[FileId, Seq[(String, Option[Int])]]
 
-  private def footerKey(path: String): (String, Long, Long) = {
-    val p = Paths.get(path)
-    try (path, Files.size(p), Files.getLastModifiedTime(p).toMillis)
-    catch { case _: java.io.IOException => (path, -1L, -1L) }
-  }
+  private def footerKey(path: String): FileId = FileId.orAbsent(Paths.get(path))
 
   private[graft] def footerColumns(path: String): Seq[(String, Option[Int])] =
     footerCache.getOrElseUpdate(footerKey(path), {
@@ -5336,17 +5324,14 @@ object IcebergMeta {
     * repeated identically on every invocation over an UNCHANGED chain.
     * The plan is a pure function of (chain state, read arguments,
     * cbo arm), and the chain state is fully pinned by the current
-    * metadata file's (version, mtime, size) — every commit, rollback,
+    * metadata file's version and [[FileId]] — every commit, rollback,
     * or maintenance verb rewrites that file, so a write invalidates the
     * key the same way it already invalidates [[metadataCache]]. Only
     * the ANALYZED PLAN is memoized (catalog semantics, the
     * Tables.load rule): every action still scans the parquet.
     * Refusals (reader-version gate, missing snapshot) throw before
-    * anything is cached. Weakly keyed on the session so stopped
-    * sessions collect. */
-  private val readMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
+    * anything is cached. */
+  private val readMemo = new Memo[DataFrame]
 
   private def metadataIdentity(root: String): String = {
     val dir = metaDir(root)
@@ -5354,40 +5339,17 @@ object IcebergMeta {
     require(Files.exists(hint),
       s"no Iceberg metadata at $root (exportIcebergMeta first)")
     val n = Files.readString(hint).trim.toLong
-    val f = dir.resolve(s"v$n.metadata.json")
-    s"$n:${Files.getLastModifiedTime(f).toMillis}:${Files.size(f)}"
+    s"$n:${FileId(dir.resolve(s"v$n.metadata.json"))}"
   }
 
   def readIceberg(spark: SparkSession, root: String,
       snapshotAsOf: Option[Long] = None,
       asOfTimestamp: Option[Long] = None,
       pruneWhere: Option[String] = None): DataFrame = {
-    val m = readMemo.synchronized {
-      var inner = readMemo.get(spark)
-      if (inner == null) {
-        inner = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        readMemo.put(spark, inner)
-      }
-      inner
-    }
     val cbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-    val key = s"$root@${metadataIdentity(root)}" +
-      s"@$snapshotAsOf@$asOfTimestamp@$pruneWhere@$cbo"
-    // stale-version keys accumulate in a long writer session (every
-    // commit mints a new identity) — cap and reset rather than leak
-    // (the r15 ckptTxnCache lesson); a reset only costs one rebuild.
-    // get/putIfAbsent, NOT computeIfAbsent: a memoized builder can call
-    // back into this map (icebergChangelog's legs read the chain) and a
-    // nested computeIfAbsent on one ConcurrentHashMap throws
-    // "Recursive update"; a racy duplicate build is benign.
-    if (m.size > 256) m.clear()
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val built =
-        readIcebergUncached(spark, root, snapshotAsOf, asOfTimestamp, pruneWhere)
-      val prev = m.putIfAbsent(key, built)
-      if (prev != null) prev else built
+    readMemo(spark, s"$root@${metadataIdentity(root)}" +
+        s"@$snapshotAsOf@$asOfTimestamp@$pruneWhere@$cbo") {
+      readIcebergUncached(spark, root, snapshotAsOf, asOfTimestamp, pruneWhere)
     }
   }
 
@@ -5486,7 +5448,7 @@ object IcebergMeta {
     * the counts every commit of this engine writes and the spec asks
     * of foreign writers. None when any manifest's counts are absent
     * (a partial sum would be a WRONG statistic, worse than none).
-    * Cached by (list path, mtime, size) — a snapshot's list is
+    * Cached by the list's [[FileId]] — a snapshot's list is
     * immutable, so every CBO-armed read of the same snapshot skips the
     * avro re-read (one GET per plan on an object store); mtime+size in
     * the key (the metadataCache discipline) so a table RE-CREATED at
@@ -5494,20 +5456,18 @@ object IcebergMeta {
     * list on the identical path — never serves the old table's count.
     * Option-valued: the TrieMap never stores raw null. */
   private val listRowCountCache =
-    TrieMap.empty[(String, Long, Long), Option[Long]]
+    TrieMap.empty[FileId, Option[Long]]
 
   private def listLiveRowCount(snap: SnapshotInfo): Option[Long] = {
     val lp = Paths.get(snap.manifestList)
-    val key = (snap.manifestList,
-      Files.getLastModifiedTime(lp).toMillis, Files.size(lp))
-    listRowCountCache.getOrElseUpdate(key, {
+    listRowCountCache.getOrElseUpdate(FileId(lp), {
       def num(r: GenericRecord, f: String): Option[Long] =
         if (r.getSchema.getField(f) == null) None
         else Option(r.get(f)).collect {
           case l: java.lang.Long => l.longValue()
           case i: java.lang.Integer => i.longValue()
         }
-      val counts = readAvro(Paths.get(snap.manifestList))
+      val counts = readAvro(lp)
         .filter(mf => num(mf, "content").forall(_ == 0L))
         .map { mf =>
           for { a <- num(mf, "added_rows_count")
@@ -5939,25 +5899,9 @@ object IcebergMeta {
       fromSeq: Long, toSeq: Long, keys: Seq[String]): DataFrame = {
     // constructed-plan memo, the [[readIceberg]] rule: the changelog
     // plan is a pure function of the pinned chain state + arguments
-    val m = readMemo.synchronized {
-      var inner = readMemo.get(spark)
-      if (inner == null) {
-        inner = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        readMemo.put(spark, inner)
-      }
-      inner
-    }
-    if (m.size > 256) m.clear()
-    val key = s"changelog@$root@${metadataIdentity(root)}" +
-      s"@$fromSeq@$toSeq@${keys.mkString(",")}"
-    // get/putIfAbsent, not computeIfAbsent: the builder reads the chain
-    // through readIceberg, which updates this same map (see there)
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val built = icebergChangelogUncached(spark, root, fromSeq, toSeq, keys)
-      val prev = m.putIfAbsent(key, built)
-      if (prev != null) prev else built
+    readMemo(spark, s"changelog@$root@${metadataIdentity(root)}" +
+        s"@$fromSeq@$toSeq@${keys.mkString(",")}") {
+      icebergChangelogUncached(spark, root, fromSeq, toSeq, keys)
     }
   }
 

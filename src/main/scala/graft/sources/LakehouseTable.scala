@@ -937,13 +937,9 @@ object LakehouseTable {
       // the plan also carries ANALYZE statistics (attach reads
       // _graft_stats.json, armed by the cbo conf) — both must key the
       // memo or a stale no-stats/stale-stats plan would be served
-      val statsF = Paths.get(root, "_graft_stats.json")
-      val statsId =
-        if (Files.exists(statsF))
-          s"${Files.size(statsF)}:${Files.getLastModifiedTime(statsF).toMillis}"
-        else "none"
+      val statsId = FileId.orAbsent(Paths.get(root, "_graft_stats.json"))
       val cbo = spark.conf.get("spark.sql.cbo.enabled", "false")
-      memoizedRead(spark, s"native@$root@${dirIdentity(manifestDir(root))}" +
+      readMemo(spark, s"native@$root@${FileId.listing(manifestDir(root))}" +
           s"@$version@$statsId@$cbo") {
         readUncached(spark, root, version)
       }
@@ -2050,18 +2046,17 @@ object LakehouseTable {
       sidecars: Seq[Path]) {
     def allFiles: Seq[Path] =
       parquetActionFiles ++ v2TopJson.toSeq ++ sidecars
-    /** Immutable-content fingerprint (size, mtime per file) — the
-      * cache-key discipline [[ckptTxnCache]] uses. */
-    def fingerprint: Seq[(String, Long, Long)] = allFiles.map(p =>
-      (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis))
+    /** Immutable-content fingerprint (path, size, mtime per file) —
+      * the cache-key discipline [[ckptTxnCache]] uses. */
+    def fingerprint: Seq[FileId] = allFiles.map(FileId(_))
   }
 
-  // v2 top (path, size, mtime) → its sidecar name list: the top file
-  // is immutable per fingerprint, and extracting sidecar actions from
-  // a parquet top is a Spark job the per-batch watermark probe must
-  // not re-run
+  // v2 top file identity → its sidecar name list: the top file is
+  // immutable per identity, and extracting sidecar actions from a
+  // parquet top is a Spark job the per-batch watermark probe must not
+  // re-run
   private val v2SidecarCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long), Seq[String]]
+    .empty[FileId, Seq[String]]
 
   /** Resolve the checkpoint `ptr` advertises to its file set — LOUDLY.
     * A pointer that names a checkpoint this reader cannot locate or
@@ -2116,8 +2111,7 @@ object LakehouseTable {
         // extraction is a Spark job — uncached it would defeat the
         // map-hit promise ckptTxnCache makes
         val sidecarNames: Seq[String] = v2SidecarCache.getOrElseUpdate(
-          (top.toString, Files.size(top),
-            Files.getLastModifiedTime(top).toMillis),
+          FileId(top),
           if (isJson) {
             val om = new com.fasterxml.jackson.databind.ObjectMapper()
             Files.readString(top).split('\n').toSeq.flatMap { line =>
@@ -2335,8 +2329,7 @@ object LakehouseTable {
   // checkpoint file name made every re-checkpoint of a table mint a
   // new entry and leak the superseded ones for the session's life
   private val ckptTxnCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, Long, Long)],
-      Seq[(String, Long, Option[Long])])]
+    .empty[String, (Seq[FileId], Seq[(String, Long, Option[Long])])]
 
   private def deltaTxnsForeign(spark: SparkSession, root: String,
       upTo: Long): Map[String, (Long, Option[Long])] = {
@@ -2548,53 +2541,15 @@ object LakehouseTable {
     * every entry — a commit appends a json, a checkpoint rewrites
     * `_last_checkpoint`, log cleanup deletes tails; each changes the
     * fingerprint). Only the ANALYZED PLAN is memoized; every action
-    * still scans the parquet. Refusals throw before caching. */
-  private val exportReadMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
-  private def dirIdentity(dir: Path): String = {
-    require(Files.isDirectory(dir), s"no directory at $dir")
-    val sb = new StringBuilder
-    val listed = Files.list(dir)
-    try listed.sorted().forEach { p =>
-      sb.append(p.getFileName.toString).append(':')
-        .append(Files.size(p)).append(':')
-        .append(Files.getLastModifiedTime(p).toMillis).append(';')
-    } finally listed.close()
-    graft.plans.TextExpressions.md5Hex(sb.toString)
-  }
+    * still scans the parquet. Refusals throw before caching. Shared by
+    * the native faces ([[read]], [[changeFeed]]), keyed there on the
+    * `_manifest` listing instead. */
+  private val readMemo = new Memo[DataFrame]
 
   private def deltaLogIdentity(root: String): String = {
     val logDir = Paths.get(root, "_delta_log")
     require(Files.isDirectory(logDir), s"no _delta_log at $root")
-    dirIdentity(logDir)
-  }
-
-  private def memoizedRead(spark: SparkSession, key: String)
-      (build: => DataFrame): DataFrame = {
-    val m = exportReadMemo.synchronized {
-      var inner = exportReadMemo.get(spark)
-      if (inner == null) {
-        inner = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        exportReadMemo.put(spark, inner)
-      }
-      inner
-    }
-    // stale-fingerprint keys accumulate in a long writer session — cap
-    // and reset rather than leak (a reset costs one rebuild).
-    // get/putIfAbsent, NOT computeIfAbsent: a memoized builder can call
-    // back into this map (changeFeed's legs call read()) and a nested
-    // computeIfAbsent on one ConcurrentHashMap throws "Recursive
-    // update"; a racy duplicate build is benign.
-    if (m.size > 256) m.clear()
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = m.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
+    FileId.listing(logDir)
   }
 
   def readDeltaExport(spark: SparkSession, root: String,
@@ -2602,7 +2557,7 @@ object LakehouseTable {
       versionAsOf: Option[Long] = None,
       timestampAsOf: Option[Long] = None,
       pruneWhere: Option[String] = None): DataFrame =
-    memoizedRead(spark, s"export@$root@${deltaLogIdentity(root)}" +
+    readMemo(spark, s"export@$root@${deltaLogIdentity(root)}" +
         s"@$useCheckpoint@$versionAsOf@$timestampAsOf@$pruneWhere" +
         s"@${spark.conf.get("spark.sql.cbo.enabled", "false")}") {
       readDeltaExportUncached(spark, root, useCheckpoint, versionAsOf,
@@ -4242,15 +4197,15 @@ object LakehouseTable {
     * Refuses a log whose metaData does not declare
     * delta.enableChangeDataFeed — changes were never recorded (Delta's
     * own error for pre-enablement ranges). */
-  // (root, version, log-file size, log-file mtime) → nearest metaData
-  // schemaString at or below that version; see the epoch-seed walk in
+  // (root, version, log-file identity) → nearest metaData schemaString
+  // at or below that version; see the epoch-seed walk in
   // readDeltaExportChanges for the invalidation argument
   private val epochSeedCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long, Long), Option[String]]
+    .empty[(String, Long, FileId), Option[String]]
 
   def readDeltaExportChanges(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long): DataFrame =
-    memoizedRead(spark, s"changes@$root@${deltaLogIdentity(root)}" +
+    readMemo(spark, s"changes@$root@${deltaLogIdentity(root)}" +
         s"@$fromVersion@$toVersion") {
       readDeltaExportChangesUncached(spark, root, fromVersion, toVersion)
     }
@@ -4333,13 +4288,12 @@ object LakehouseTable {
       var seed: Option[String] = None
       var done = v < 0
       val visited = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, Long, Long)]
+        .empty[(String, Long, FileId)]
       while (!done) {
         val lf = logDir.resolve(f"$v%020d.json")
         if (!Files.exists(lf)) done = true
         else {
-          val key = (root, v, Files.size(lf),
-            Files.getLastModifiedTime(lf).toMillis)
+          val key = (root, v, FileId(lf))
           epochSeedCache.get(key) match {
             case Some(known) => seed = known; done = true
             case None =>
@@ -6320,7 +6274,7 @@ object LakehouseTable {
     // the native-face twin of the readDeltaExport memo: the diff plan is
     // a pure function of the two pinned manifests (+ mapping/DV state,
     // all under _manifest) — fingerprint the whole _manifest listing
-    memoizedRead(spark, s"cdf@$root@${dirIdentity(manifestDir(root))}" +
+    readMemo(spark, s"cdf@$root@${FileId.listing(manifestDir(root))}" +
         s"@$fromVersion@$toVersion@${keys.mkString(",")}") {
       changeFeedUncached(spark, root, fromVersion, toVersion, keys)
     }

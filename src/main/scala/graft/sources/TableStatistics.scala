@@ -380,17 +380,17 @@ object TableStatistics {
     cache.remove(root)
   }
 
-  // (root → (mtime, parsed)) — the read path probes on every query
-  private val cache = TrieMap.empty[String, (Long, Option[TableStats])]
+  // (root → (file identity, parsed)) — the read path probes on every query
+  private val cache = TrieMap.empty[String, (FileId, Option[TableStats])]
 
-  /** Parsed stats if present (cached by file mtime). */
+  /** Parsed stats if present (cached by file identity). */
   def statsOf(root: String): Option[TableStats] = {
     val p = statsPath(root)
     if (!Files.exists(p)) None
     else {
-      val mt = Files.getLastModifiedTime(p).toMillis
+      val id = FileId(p)
       cache.get(root) match {
-        case Some((m, st)) if m == mt => st
+        case Some((cached, st)) if cached == id => st
         case _ =>
           val parsed = scala.util.Try {
             val n = mapper.readTree(Files.readString(p))
@@ -407,7 +407,7 @@ object TableStatistics {
             TableStats(n.get("version").asLong(), n.get("rowCount").asLong(),
               n.get("sizeInBytes").asLong(), cols)
           }.toOption
-          cache.put(root, (mt, parsed))
+          cache.put(root, (id, parsed))
           parsed
       }
     }

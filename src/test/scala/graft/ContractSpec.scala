@@ -44,6 +44,42 @@ class ContractSpec extends AnyFunSuite {
         s"${SparkEntry.queries.size} — update README.md")
   }
 
+  test("session memos and identity-hash cache keys live only in sources/Memo.scala") {
+    // a WeakHashMap keyed on SparkSession whose values hold DataFrames
+    // never collects (each value pins its own key), and an
+    // identityHashCode key can be shared by two sessions: both belong
+    // in graft.sources.Memo, which retires stopped sessions explicitly
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val memoFile = Paths.get("src/main/scala/graft/sources/Memo.scala")
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sources = try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != memoFile).toList
+    finally walk.close()
+    assert(sources.size > 50, "source scan found no sources: wrong working directory?")
+    val weakKey = """WeakHashMap\s*\[\s*SparkSession\s*,""".r
+    // the WeakHashMap's value type: the text up to its closing bracket
+    def valueType(src: String, from: Int): String = {
+      var depth = 1; var i = from
+      while (i < src.length && depth > 0) {
+        if (src(i) == '[') depth += 1 else if (src(i) == ']') depth -= 1
+        i += 1
+      }
+      src.substring(from, i)
+    }
+    val offenders = sources.flatMap { p =>
+      val src = Files.readString(p)
+      val weak = weakKey.findAllMatchIn(src).map(m => valueType(src, m.end))
+        .filter(v => v.contains("DataFrame") || v.contains("Dataset"))
+        .map(_ => s"$p: WeakHashMap[SparkSession, DataFrame...] memo")
+      val idHash =
+        if (src.contains("identityHashCode")) Seq(s"$p: identityHashCode key")
+        else Nil
+      weak ++ idHash
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("query names follow the qNN_name convention with unique numbers") {
     val pat = """q(\d+)_[a-z0-9_]+""".r
     val nums = SparkEntry.queries.keys.toSeq.map {

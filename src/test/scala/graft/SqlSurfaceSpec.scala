@@ -11,6 +11,21 @@ class SqlSurfaceSpec extends AnyFunSuite {
   test("GraftExtensions injects the function set without error") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // would throw on signature drift
+    // the names the extension injects equal the names register creates:
+    // a fresh session holds the builtins plus the injected set
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
+    def custom(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet -- builtin
+    val injected = custom(spark.newSession())
+    val bare = spark.newSession()
+    injected.foreach(n =>
+      bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier(n)))
+    assert(custom(bare).isEmpty)
+    GraftFunctions.register(bare)
+    assert(injected.nonEmpty && custom(bare) == injected,
+      s"injected $injected, registered ${custom(bare)}")
   }
 
   test("registerAll exposes the whole schema to arbitrary SQL") {

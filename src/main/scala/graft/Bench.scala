@@ -36,9 +36,12 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    // Untimed warmup pass: JIT + whole-stage-codegen compilation and parquet
-    // footer caches are one-time JVM costs, not query costs — time the
-    // steady state (disable with SPARK_GRAFT_WARMUP=0).
+    // Untimed warmup pass: JIT, parquet footer caches and relation caches
+    // are one-time JVM costs, not query costs — time the steady state
+    // (disable with SPARK_GRAFT_WARMUP=0). Whole-stage-codegen compilation
+    // is one-time only for the classes the codegen cache still holds
+    // (GraftExtensions.CodegenCacheEntries): the full board generates more
+    // than that, so each pass recompiles what LRU evicted.
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0")
       ordered.foreach { case (_, fn) =>
         try { fn(spark, sfDir).count() } catch { case _: Throwable => () }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable surface for the similarity-search tiers: exact brute-force,
   * hand-rolled IVF (q37), and the MLlib BucketedRandomProjectionLSH
   * variant — side by side for the same query vector.
@@ -13,14 +11,7 @@ object AnnDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val qv = args.lift(1).map(_.toLong).getOrElse(0L)
     val k = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     println(s"[ann-demo] exact cosine top-$k for vec $qv:")
     operators.Similarity.queries("q36_knn_bruteforce")(spark, sfDir)
       .filter(org.apache.spark.sql.functions.col("qid") === qv)

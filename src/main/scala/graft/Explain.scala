@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit surface: prints `.explain("formatted")` for selected queries
   * so pushdown / broadcast / partial-agg / exchange-reuse / codegen spans
   * can be reviewed (and regressions spotted) without the Spark UI.
@@ -22,14 +20,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else defaultAudit
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(logLevel = "ERROR")
     names.foreach { name =>
       println(s"\n================ $name ================")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -20,15 +19,7 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(defaultCpus = 32, logLevel = "ERROR")
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -1877,7 +1877,7 @@ object IcebergMeta {
           }
           val vals = valsB.toMap
           val tvals = tvalsB.toMap
-          normPathDriver(df.get("file_path").toString) -> FileMetrics(
+          RowDeletes.locationKey(df.get("file_path").toString) -> FileMetrics(
             vals, tvals,
             intMapOf(df, "value_counts")
               .map { case (k, v) => k -> v.asInstanceOf[Long] },
@@ -2220,7 +2220,7 @@ object IcebergMeta {
             fillFields.map { case (_, n, dt) =>
               org.apache.spark.sql.types.StructField(s"__fill_$n", dt) })
           val rows = fs.map { f =>
-            val np = normPathDriver(f)
+            val np = RowDeletes.locationKey(f)
             // absent value = the spec's "return null in all other
             // cases" (a file committed before the field was partitioned)
             val vals = pidx.getOrElse(np, Map.empty)
@@ -2250,9 +2250,11 @@ object IcebergMeta {
     require(files.nonEmpty, "chainScan: empty file slice")
     val basePath = Paths.get(root, "data").toString
     def finish(df: DataFrame, nameOf: Int => Option[String]): DataFrame = {
+      // (__p, __ri) are RowDeletes.File/Row: on a union, which has no
+      // `_metadata`, dropPositions joins on these columns as they are
       val base =
         if (!withIdentity) df
-        else df.withColumn("__p", normPathCol(col("_metadata.file_path")))
+        else df.withColumn("__p", RowDeletes.scanFileKey(""))
           .withColumn("__ri", col("_metadata.row_index"))
       val out = fields.map { case (id, n, dt) =>
         nameOf(id) match {
@@ -3831,15 +3833,15 @@ object IcebergMeta {
     val (dataEntries, dels) = snapshotEntries(root, parent)
     if (dels.isEmpty) return parent // no deletes: nothing to reclaim
     val normSeq: Map[String, Long] = dataEntries.map { case (p, s) =>
-      normPathDriver(p) -> s }.toMap
+      RowDeletes.locationKey(p) -> s }.toMap
     val posRefs: Set[String] = dels.filter(_.content == 1).flatMap { d =>
       spark.read.parquet(d.path).select("file_path").distinct()
-        .collect().iterator.map(r => normPathDriver(r.getString(0)))
+        .collect().iterator.map(r => RowDeletes.locationKey(r.getString(0)))
         .filter(np => normSeq.get(np).exists(_ <= d.seq))
     }.toSet
     val maxEq = dels.filter(_.content == 2).map(_.seq).maxOption
     val targets = dataEntries.filter { case (p, s) =>
-      posRefs.contains(normPathDriver(p)) || maxEq.exists(s < _)
+      posRefs.contains(RowDeletes.locationKey(p)) || maxEq.exists(s < _)
     }
     if (targets.isEmpty) return parent // deletes reference nothing live
     val fields = schemaIdFieldsOf(root, curSchemaId)
@@ -4253,19 +4255,19 @@ object IcebergMeta {
       mfCache.getOrElseUpdate(p.toString, readAvro(p))
     val referenced = scala.collection.mutable.HashSet.empty[Path]
     // a referenced path protects under BOTH normalizations: the raw
-    // committed form with only the file:-URI prefix stripped (matches
-    // an on-disk layout carrying literal %XX escapes — Spark writes
-    // them into partition dir names) AND the read plane's full
-    // normPathDriver decode (matches a URI/percent-ENCODED manifest
+    // committed form with only the file:-URI prefix stripped (the read
+    // plane's RowDeletes.locationKey; matches an on-disk layout carrying
+    // literal %XX escapes — Spark writes them into partition dir names)
+    // AND the full URI decode (matches a URI/percent-ENCODED manifest
     // over a decoded layout). Protecting both costs set entries; a
     // one-sided choice deletes live files on whichever layout it
     // mis-guessed — the irreversible direction. A stray '%' that
     // URLDecoder rejects keeps the raw form only, never a crash.
     def metaRef(p: String): Path =
-      Paths.get(p.replaceFirst("^file:/+", "/")).toAbsolutePath.normalize()
+      Paths.get(RowDeletes.locationKey(p)).toAbsolutePath.normalize()
     def addRef(raw: String): Unit = {
       referenced += metaRef(raw)
-      scala.util.Try(normPathDriver(raw)).foreach(d =>
+      scala.util.Try(RowDeletes.fileKey(raw, "")).foreach(d =>
         referenced += Paths.get(d).toAbsolutePath.normalize())
     }
     snapshots(root).foreach { s =>
@@ -4839,7 +4841,8 @@ object IcebergMeta {
     import org.apache.spark.sql.functions.{broadcast, col}
     import org.apache.spark.sql.types.MetadataBuilder
     import spark.implicits._
-    val lookup = candidates.map { case (p, _) => (normPathDriver(p), p) }
+    val lookup = candidates
+      .map { case (p, _) => (RowDeletes.locationKey(p), p) }
       .toDF("__np", "__mp")
     val fpMeta = new MetadataBuilder()
       .putLong("parquet.field.id", 2147483546L).build()
@@ -5209,24 +5212,21 @@ object IcebergMeta {
       val hasIdentity = raw.columns.contains("__p")
       val withP =
         if (hasIdentity) raw
-        else raw.withColumn("__p", normPathCol(col("_metadata.file_path")))
+        else raw.withColumn("__p", RowDeletes.scanFileKey(""))
       // data-file sequence numbers ride in via an O(files) broadcast —
       // BOTH delete kinds scope on them per spec: a position delete
       // applies to data files of sequence ≤ its own (so a path REMOVED
       // and later RE-ADDED above a carried delete's sequence reads raw,
       // agreeing with the batched changelog leg's pure-append
       // classification), an equality delete to STRICTLY SMALLER
-      // sequences. The manifest's file_path must be normalized with the
-      // SAME transform as __p (file:/+ → /, + protected, url-decoded):
-      // a foreign chain storing URI-form or percent-encoded paths
-      // would otherwise miss the join, leave __seq null, and a
-      // null-vs-seq condition would silently KEEP rows the delete
-      // covers (fail-open resurrection). Driver-side mirror of the __p
-      // SQL expression:
-      def normPath(p: String): String = java.net.URLDecoder.decode(
-        p.replaceFirst("^file:/+", "/").replace("+", "%2B"), "UTF-8")
+      // sequences. The manifest's file_path must be keyed by
+      // RowDeletes.locationKey, the location twin of __p's key: a
+      // foreign chain storing file: URIs would otherwise miss the join,
+      // leave __seq null, and a null-vs-seq condition would silently KEEP
+      // rows the delete covers (fail-open resurrection).
       import spark.implicits._
-      val seqDf = dataEntries.map { case (p, s) => (normPath(p), s) }
+      val seqDf = dataEntries
+        .map { case (p, s) => (RowDeletes.locationKey(p), s) }
         .toDF("__seq_path", "__seq")
       val withSeq = withP.join(
         org.apache.spark.sql.functions.broadcast(seqDf),
@@ -5247,24 +5247,19 @@ object IcebergMeta {
       val afterPos =
         if (posDels.isEmpty) withSeq
         else {
-          // file_path normalizes through the SAME transform as __p (the
-          // file's both-sides-of-every-path-join rule): a foreign writer
-          // storing URI-form or percent-encoded paths in its delete files
-          // would otherwise never match and the anti-join would silently
-          // KEEP every deleted row (fail-open resurrection)
+          // file_path is keyed by the location twin of __p's key (on
+          // both sides of every path join): a foreign writer storing
+          // file: URIs in its delete files would otherwise never match
+          // and the anti-join would silently KEEP every deleted row
+          // (fail-open resurrection)
           val del = posDels.map(d =>
               spark.read.parquet(d.path)
-                .select(normPathCol(col("file_path")).as("__del_path"),
-                  col("pos").as("__del_pos"))
+                .select(RowDeletes.locationKey(col("file_path"))
+                  .as(RowDeletes.DelFile), col("pos").as(RowDeletes.DelRow))
                 .withColumn("__del_seq", lit(d.seq)))
             .reduce(_ unionByName _)
-          val withRi =
-            if (hasIdentity) withSeq
-            else withSeq.withColumn("__ri", col("_metadata.row_index"))
-          val anti = withRi.join(del, col("__p") === col("__del_path") &&
-            col("__ri") === col("__del_pos") &&
-            seqScoped <= col("__del_seq"), "left_anti")
-          if (hasIdentity) anti else anti.drop("__ri")
+          RowDeletes.dropPositions(withSeq, "", del,
+            Some(seqScoped <= col("__del_seq")))
         }
       val eqDels = dels.filter(_.content == 2)
       val result =
@@ -5701,7 +5696,7 @@ object IcebergMeta {
     }
     val idx = idxOverride.getOrElse(fileMetricsIndex(root))
     entries.filter { case (p, _) =>
-      idx.get(normPathDriver(p))
+      idx.get(RowDeletes.locationKey(p))
         .forall(fm => MetricsPruning.canMatch(parsed, metaFor(fm)))
     }
   }
@@ -5933,8 +5928,7 @@ object IcebergMeta {
     // bounds churn count — a streaming micro-batch or a q198-sized TVF
     // range pays zero extra manifest reads for a decision that could
     // only come out "legged".
-    val batchEligible = range.size > 4 &&
-      !sys.env.get("GRAFT_CHANGELOG_NO_BATCH").contains("1")
+    val batchEligible = range.size > 4
     val classified: Seq[Either[Churn, SnapshotInfo]] =
       if (!batchEligible) range.map(Right(_))
       else range.flatMap { s =>
@@ -6116,7 +6110,7 @@ object IcebergMeta {
       withIdentity = true).drop("__ri")
     import spark.implicits._
     val meta = files.map { case (f, s) =>
-      (normPathDriver(f), s.id, s.seq, s.ts)
+      (RowDeletes.locationKey(f), s.id, s.seq, s.ts)
     }.toDF("__mp", "__msid", "__mseq", "__mts")
     scan.join(broadcast(meta), col("__p") === col("__mp"), "left")
       .withColumn("__sid", when(col("__msid").isNull,
@@ -6154,16 +6148,6 @@ object IcebergMeta {
       : org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(fields.map { case (n, dt) =>
       org.apache.spark.sql.types.StructField(n, dt) })
-
-  /** The SQL-side normalization of a manifest/delete-file path column to
-    * the `__p` plain-filesystem form (file:/+ stripped, + protected,
-    * url-decoded) — both sides of every path join must pass through it. */
-  private def normPathCol(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{regexp_replace, url_decode}
-    url_decode(regexp_replace(
-      regexp_replace(c, "^file:/+", "/"), "\\+", "%2B"))
-  }
 
   /** One snapshot's row-level changes (see [[icebergChangelog]]); None
     * when the snapshot changes nothing row-visible (a metadata-only
@@ -6263,7 +6247,7 @@ object IcebergMeta {
           val files = dels.filter(_.content == 1).map(_.path).distinct
           if (files.isEmpty) None
           else Some(spark.read.parquet(files: _*)
-            .select(normPathCol(col("file_path")).as("file_path"),
+            .select(RowDeletes.locationKey(col("file_path")).as("file_path"),
               col("pos")))
         }
         val posLevel: Option[DataFrame] = {
@@ -6281,12 +6265,12 @@ object IcebergMeta {
             val touched = newDel.union(restored)
               .select(col("file_path")).distinct()
               .collect().map(_.getString(0))
-              .filter(f => carried.exists(c => normPathDriver(c) == f))
+              .filter(f => carried.exists(c => RowDeletes.locationKey(c) == f))
               .sorted
             if (touched.isEmpty) None
             else {
               val rawFiles = carried.filter(c =>
-                touched.contains(normPathDriver(c)))
+                touched.contains(RowDeletes.locationKey(c)))
               val raw = chainScan(spark, root, rawFiles,
                 schemaIdFieldsOf(root, currentSchemaId(root)),
                 withIdentity = true)
@@ -6328,7 +6312,7 @@ object IcebergMeta {
                 schemaIdFieldsOf(root, curSchemaId), withIdentity = true)
               import spark.implicits._
               val seqDf = dataN
-                .map { case (pa, sq) => (normPathDriver(pa), sq) }
+                .map { case (pa, sq) => (RowDeletes.locationKey(pa), sq) }
                 .toDF("__sc_path", "__sc_seq")
               val visAll = applyDeleteEntries(spark, root, curSchemaId,
                   raw, dataP, delsP)
@@ -6368,11 +6352,6 @@ object IcebergMeta {
           _.unionByName(_, allowMissingColumns = true))))
     }
   }
-
-  /** Driver-side twin of [[normPathCol]]. */
-  private def normPathDriver(p: String): String =
-    java.net.URLDecoder.decode(
-      p.replaceFirst("^file:/+", "/").replace("+", "%2B"), "UTF-8")
 
   /** Align a raw carried-file scan to the current metadata schema (the
     * [[readIcebergFiles]] projection, shared). */

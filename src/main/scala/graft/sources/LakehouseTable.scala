@@ -869,25 +869,6 @@ object LakehouseTable {
     (append(good, root, partitionBy, txn, txnApp), nBad)
   }
 
-  /** Read the table at `version` (default: latest). Partition columns are
-    * recovered from the hive paths via basePath, so partition pruning
-    * still applies to time-travel reads. */
-  /** Manifest-relative path of each row's backing data file, as a Column —
-    * the row-identity half of the deletion-vector join key. MIRRORS
-    * [[toRel]] exactly (URI → strip scheme → %-decode with '+' shielded →
-    * relativize against data/): DV writers and DV-applying readers both
-    * derive the key from THIS expression, so the two can never disagree
-    * on encoding. */
-  private def relPathCol(root: String): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val prefix = dataDir(root).toString + "/"
-    substring(
-      url_decode(regexp_replace(
-        regexp_replace(col("_metadata.file_path"), "^file:/+", "/"),
-        "\\+", "%2B")),
-      prefix.length + 1, Int.MaxValue)
-  }
-
   /** The (path, pos) rows of a set of DV files, restricted to `forFiles`
     * (one DV parquet may cover several data files, and may carry entries
     * for files a later COW rewrite replaced — those are inert and
@@ -911,21 +892,18 @@ object LakehouseTable {
     * anti-join sits above the scan). */
   private def applyDvs(spark: SparkSession, root: String, v: Long,
       relFiles: Seq[String], raw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     val want = relFiles.toSet
     val dvs = dvsAt(root, v).filter(e => want(e._1)).toMap
     if (dvs.isEmpty) raw
-    else {
-      val del = dvRows(spark, root, dvs)
-        .select(col("path").as("__dv_path"), col("pos").as("__dv_pos"))
-      raw.withColumn("__dv_rel", relPathCol(root))
-        .withColumn("__dv_ri", col("_metadata.row_index"))
-        .join(del, col("__dv_rel") === col("__dv_path") &&
-          col("__dv_ri") === col("__dv_pos"), "left_anti")
-        .drop("__dv_rel", "__dv_ri")
-    }
+    else RowDeletes.dropPositions(raw, dataDir(root).toString,
+      dvRows(spark, root, dvs).select(col("path").as(RowDeletes.DelFile),
+        col("pos").as(RowDeletes.DelRow)))
   }
 
+  /** Read the table at `version` (default: latest). Partition columns are
+    * recovered from the hive paths via basePath, so partition pruning
+    * still applies to time-travel reads. */
   def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
     // constructed-plan memo (the readDeltaExport rule): construction
     // reads every data file's footer under mergeSchema — pure repeated
@@ -4368,7 +4346,7 @@ object LakehouseTable {
       if (cdcFiles.isEmpty) None
       else {
         import org.apache.spark.sql.functions.{broadcast, concat, raise_error,
-          regexp_replace, timestamp_millis, url_decode, when}
+          timestamp_millis, when}
         require(cdcFiles.map(_._1).distinct.size == cdcFiles.size,
           s"cdc file referenced by multiple log versions at $root — " +
             "the change files of distinct commits must be distinct")
@@ -4386,9 +4364,7 @@ object LakehouseTable {
               .option("mergeSchema", "true") // union schema WITHIN the
               // epoch, like the per-version unionByName(allowMissing) did
               .parquet(group.map(_._1): _*)
-              .withColumn("__p", url_decode(regexp_replace(
-                regexp_replace(col("_metadata.file_path"), "^file:/+", "/"),
-                "\\+", "%2B"))))
+              .withColumn("__p", RowDeletes.scanFileKey("")))
           }
           .reduce(_.unionByName(_, allowMissingColumns = true))
         val joined = scan.join(broadcast(metaDf),
@@ -4712,37 +4688,26 @@ object LakehouseTable {
         DeltaDv.readPositions(root,
             DeltaDv.Descriptor(st, pid, off, size, card))
           .iterator.map(ri => (p, ri))
-      }.toDF("__dv_path", "__dv_pos")
+      }.toDF(RowDeletes.DelFile, RowDeletes.DelRow)
   }
 
   private def readDeltaState(spark: SparkSession, root: String,
       state: DeltaReplayState, files: Seq[String], basePath: String,
       mappingMode: String, withPath: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_replace, substring, url_decode}
+    import org.apache.spark.sql.functions.col
     // root-relative DECODED path of each row's source file — the same
     // form the replay's live/dvs/stats maps key on
-    val rootPrefix = Paths.get(root).toString + "/"
-    def relOfRow = substring(
-      url_decode(regexp_replace(
-        regexp_replace(col("_metadata.file_path"), "^file:/+", "/"),
-        "\\+", "%2B")),
-      rootPrefix.length + 1, Int.MaxValue)
+    val under = Paths.get(root).toString
+    val pathCol =
+      if (withPath) Seq(RowDeletes.scanFileKey(under).as("__p")) else Nil
     // DELETION VECTORS: decode each live file's descriptor (spec blob →
-    // 64-bit row indexes) and anti-join on (root-relative path,
-    // _metadata.row_index) — the same position-delete shape the native
-    // read path's applyDvs uses. The descriptor side is O(deleted rows of
-    // the live files), decoded on EXECUTORS; broadcast while small.
+    // 64-bit row indexes) and drop those positions. The descriptor side
+    // is O(deleted rows of the live files), decoded on EXECUTORS;
+    // broadcast while small.
     def applyLogDvs(raw: DataFrame): DataFrame =
       if (state.dvs.isEmpty) raw
-      else {
-        val posDf = dvPositionsDf(spark, root, state.dvs)
-        val rel = relOfRow
-        raw.withColumn("__dv_rel", rel)
-          .withColumn("__dv_ri", col("_metadata.row_index"))
-          .join(posDf, col("__dv_rel") === col("__dv_path") &&
-            col("__dv_ri") === col("__dv_pos"), "left_anti")
-          .drop("__dv_rel", "__dv_ri")
-      }
+      else RowDeletes.dropPositions(raw, under,
+        dvPositionsDf(spark, root, state.dvs))
     // the log's LAST metaData schema is authoritative (what any Delta
     // reader selects): request each logical field's TYPE at its PHYSICAL
     // parquet name as an explicit read schema — this serves a
@@ -4780,15 +4745,14 @@ object LakehouseTable {
           .parquet(files: _*)
         applyLogDvs(raw)
           .select(st.fields.toSeq.map(f => col(physOf(f)).as(f.name)) ++
-            (if (withPath) Seq(relOfRow.as("__p")) else Nil): _*)
+            pathCol: _*)
       case _ =>
         val raw = spark.read
           .option("basePath", basePath)
           .option("mergeSchema", "true")
           .parquet(files: _*)
         val cols = raw.columns.toSeq
-        applyLogDvs(raw).select(cols.map(col) ++
-          (if (withPath) Seq(relOfRow.as("__p")) else Nil): _*)
+        applyLogDvs(raw).select(cols.map(col) ++ pathCol: _*)
     }
   }
 
@@ -4890,8 +4854,8 @@ object LakehouseTable {
         val dvName = "dv-import"
         Files.createDirectories(deletesDir(dstRoot))
         dvPositionsDf(spark, srcRoot, state.dvs)
-          .join(destMapDf, col("__dv_path") === col("__src"))
-          .select(col("path"), col("__dv_pos").as("pos"))
+          .join(destMapDf, col(RowDeletes.DelFile) === col("__src"))
+          .select(col("path"), col(RowDeletes.DelRow).as("pos"))
           // no coalesce(1): a huge foreign delete writes its sidecar in
           // parallel; the sidecar is a directory relation either way
           .write.mode("overwrite") // failed-import leftover replaced
@@ -5694,7 +5658,8 @@ object LakehouseTable {
           .parquet(relFiles.map(f => dataDir(root).resolve(f).toString): _*)
       case None => readFiles(spark, root, relFiles)
     }
-    toLogical(raw.withColumn("__dv_rel", relPathCol(root))
+    toLogical(raw.withColumn("__dv_rel",
+        RowDeletes.scanFileKey(dataDir(root).toString))
       .withColumn("__dv_ri", col("_metadata.row_index")), root, v)
   }
 
@@ -5799,15 +5764,6 @@ object LakehouseTable {
       relFiles: Seq[String]): DataFrame =
     spark.read.option("basePath", dataDir(root).toString)
       .parquet(relFiles.map(f => dataDir(root).resolve(f).toString): _*)
-
-  private def toRel(root: String, absUri: String): String = {
-    val stripped = absUri.stripPrefix("file:").replaceAll("^/+", "/")
-    // input_file_name() returns a URI: %-decode it (a space in a partition
-    // value arrives as %20) or the path never matches its manifest entry.
-    // '+' is a literal plus in a URI path, so shield it from URLDecoder.
-    val abs = java.net.URLDecoder.decode(stripped.replace("+", "%2B"), "UTF-8")
-    Paths.get(dataDir(root).toString).relativize(Paths.get(abs)).toString
-  }
 
   /** Copy-on-write MERGE (Delta-style upsert): `updates` rows replace
     * current rows with the same `keys` values; update rows matching nothing
